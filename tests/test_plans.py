@@ -7,6 +7,9 @@ at test scale — these tests pin the plan shape instead.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -501,3 +504,37 @@ def test_r14_late_op_plans(spark, sf_dir):
 
     wn = plan_of(spark, sf_dir, "x_winnow")
     assert "EvalPython" not in wn  # pure higher-order arrays
+
+
+_PLAN_NODE = re.compile(r"^[\s:|+\-]*(\w+)")
+
+#: (Exchange, Sort, SortMergeJoin) node counts in each iterative graph
+#: query's physical plan at sf0.001.  PageRank and PPR are pinned exactly;
+#: the rest may only shrink.
+_LOOP_PLAN_PINS = {
+    "x_pagerank": (14, 0, 0),
+    "x_ppr": (6, 0, 0),
+    "x_hits": (2, 2, 1),
+    "x_kcore": (1, 0, 0),
+    "x_label_prop": (0, 0, 0),
+    "x_bfs_hops": (45, 44, 24),
+    "x_sssp": (0, 0, 0),
+    "x_dedup_clusters": (0, 0, 0),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_LOOP_PLAN_PINS))
+def test_loop_query_plan_shape(spark, sf_dir, name):
+    """The round loops keep their exchange/sort/sort-merge-join counts:
+    a refactor of the shared fixpoint machinery must not add a
+    per-round shuffle or sort to any of them."""
+    final = plan_of(spark, sf_dir, name).split("== Initial Plan ==")[0]
+    nodes = Counter(
+        m.group(1) for m in map(_PLAN_NODE.match, final.splitlines()) if m
+    )
+    got = (nodes["Exchange"], nodes["Sort"], nodes["SortMergeJoin"])
+    pin = _LOOP_PLAN_PINS[name]
+    if name in ("x_pagerank", "x_ppr"):
+        assert got == pin, (name, got)
+    else:
+        assert all(g <= p for g, p in zip(got, pin)), (name, got, pin)
