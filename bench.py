@@ -153,13 +153,15 @@ def _sweep_persisted(spark) -> None:
     re-execute."""
     import gc
 
+    from py4j.protocol import Py4JError
+
     gc.collect()  # drop py4j refs so the JVM side can release the plans
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in jmap.values().toArray():
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for jrdd in list(jmap.values()):
+        try:
             jrdd.unpersist(False)
-    except Exception:
-        pass  # best-effort hygiene — never fail the bench over it
+        except Py4JError as e:  # hygiene only — never fail the bench
+            print(f"bench: unpersist failed: {e}", file=sys.stderr)
 
 
 def _needs_rebuild(probe) -> bool:

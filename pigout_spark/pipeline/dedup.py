@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from pigout_spark.pipeline.graph import _EVERY_CC, _edges, _iterate
+
 #: Mersenne prime modulus for the MinHash permutation family.
 MINHASH_P = 2_147_483_647
 
@@ -865,20 +867,11 @@ def dedup_clusters(
     # materialize the symmetric edge list ONCE: it is joined every
     # round, and without the materialization the whole upstream pair
     # generation (minhash/jaccard/simhash) would re-execute per round —
-    # measured 28 s → 12 s on the sf0.1 minhash graph (2M edges).
-    # r14 (guide §2.3/§2.4), three shape changes, output-identical:
-    # - BOTH edge directions are emitted IN-TASK (explode of a 2-array)
-    #   instead of union-of-two-projections, which planned the entire
-    #   upstream pair generation TWICE (no common-subexpression reuse
-    #   across union branches) — one pass over the pair relation, not
-    #   two.
-    # - The edge relation is LANDED ON THE JOIN KEY (explicit-count
-    #   repartition on u, AQE-coalesce-exempt) before materializing.
-    # - The former ``.distinct()`` (a second full-width exchange) is
-    #   gone: min-label CC is idempotent to parallel edges, so dedup of
-    #   a pair relation that generators already emit exactly-once was
-    #   pure overhead — duplicate-heavy inputs just add message volume
-    #   that the map-side partial min absorbs.
+    # measured 28 s → 12 s on the sf0.1 minhash graph (2M edges).  No
+    # distinct: min-label CC is idempotent to parallel edges, so dedup
+    # of a pair relation that generators already emit exactly-once was
+    # pure overhead — duplicate-heavy inputs just add message volume
+    # that the map-side partial min absorbs.
     # r15 (VERDICT r14 #2, guide §2.4): checkpoint, then — for graphs
     # where it pays — cache-on-key.  A localCheckpoint surfaces as
     # LogicalRDD with UnknownPartitioning (measured on this Spark
@@ -893,7 +886,7 @@ def dedup_clusters(
     #   LSH subtree).  Rejected.
     # - checkpoint THEN a one-exchange repartition+persist on top: the
     #   checkpoint truncates lineage (tiny per-round plans) and the
-    #   InMemoryRelation carries HashPartitioning(u, npart), so the
+    #   InMemoryRelation carries HashPartitioning(__s, npart), so the
     #   per-round join plans ZERO edge-side exchange — the round's only
     #   exchange is the frontier-pruned sender side.  Interleaved A/B
     #   (3 reps/arm, same session): the 4.2 M-edge pair-clique graph
@@ -906,37 +899,23 @@ def dedup_clusters(
     # cheap count over the just-written checkpoint blocks): big graphs
     # — where the per-round edge exchange is real data, and the only
     # regime that exists at 100 TB — take the cached path; small ones
-    # keep the r14 shape.  The cache copy doubles transient edge
-    # storage on disk; both copies drop when the call returns.
-    # The r14 objection to persist() — CacheManager serves rebuilt
-    # bench runs by canonicalized-plan match, i.e. silent result
-    # caching — is closed by the ``finally`` unpersist below: the cache
-    # entry lives only inside THIS call (the loop runs its own
-    # per-round actions), is deregistered before returning, and the
-    # returned labels are checkpoint-backed, independent of it.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(left).alias("u"), F.col(right).alias("v")
-                    ),
-                    F.struct(
-                        F.col(right).alias("u"), F.col(left).alias("v")
-                    ),
-                )
-            ).alias("__e")
-        )
-        .select(F.col("__e.u").alias("u"), F.col("__e.v").alias("v"))
-        .localCheckpoint(storageLevel=disk)
-    )
+    # keep the checkpoint-only shape.  The cache copy doubles transient
+    # edge storage on disk; both copies drop when the call returns.
+    # The objection to persist() — CacheManager serves rebuilt bench
+    # runs by canonicalized-plan match, i.e. silent result caching — is
+    # closed by the ``finally`` unpersist below: the cache entry lives
+    # only inside THIS call (the loop runs its own per-round actions),
+    # is deregistered before returning, and the returned labels are
+    # checkpoint-backed, independent of it.
+    edges = _edges(pairs, F.col(left), F.col(right), symmetric=True)
+    edges = edges.localCheckpoint(storageLevel=disk)
     cached_edges = None
     if edges.count() >= _CC_EDGE_CACHE_MIN:
-        edges = edges.repartition(npart, "u").persist(disk)
+        edges = edges.repartition(npart, "__s").persist(disk)
         cached_edges = edges
     labels = (
-        edges.select("u").distinct()
-        .select(F.col("u").alias("id"), F.col("u").alias("lbl"))
+        edges.select("__s").distinct()
+        .select(F.col("__s").alias("id"), F.col("__s").alias("lbl"))
         .localCheckpoint(storageLevel=disk)
     )
 
@@ -961,6 +940,7 @@ def dedup_clusters(
     # correct for ANY orderable id type.
     prev_total = _total(labels)
     numeric_probe = prev_total is not None or labels.isEmpty()
+
     # Delta messaging (r14, guide §2.3 — shuffle fewer bytes): a node
     # whose label did NOT change last round already delivered that
     # label to its neighbors in an earlier round (labels are monotone
@@ -971,69 +951,62 @@ def dedup_clusters(
     # edge-sized, which at corpus scale is the difference between
     # re-shuffling the whole graph every round and shuffling only the
     # frontier.
-    changed = labels
+    def propagate(state, i, cut):
+        labels, changed = state
+        # The sender side is node-sized (delta-sized after round 0);
+        # SHUFFLE_HASH builds that small slice per partition (never a
+        # broadcast of a node-sized relation) and STREAMS the edges —
+        # no per-round sort of the edge list, which the default
+        # sort-merge paid every round.  On the cached path the edge side
+        # carries HashPartitioning(__s, npart), so the round's ONLY
+        # exchange is the sender side.
+        msgs = edges.join(
+            changed.hint("shuffle_hash"), edges["__s"] == changed["id"]
+        ).select(F.col("__d").alias("id"), F.col("lbl"))
+        jump = (
+            labels.alias("a")
+            .join(labels.alias("b"), F.col("a.lbl") == F.col("b.id"))
+            .select(F.col("a.id").alias("id"), F.col("b.lbl").alias("lbl"))
+        )
+        # The cut is lazy: the convergence probe right below writes the
+        # checkpoint as a side effect instead of an eager job of its own.
+        new_labels = cut(
+            labels.select("id", "lbl")
+            .union(msgs)
+            .union(jump)
+            .groupBy("id")
+            .agg(F.min("lbl").alias("lbl"))
+        )
+        # next round's senders: nodes whose label shrank this round
+        # (node-sized join of two checkpointed label frames, evaluated
+        # lazily inside next round's single job); the non-numeric
+        # convergence probe reads it too.
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
+            .where(F.col("n.lbl") != F.col("o.lbl"))
+            .select(F.col("n.id").alias("id"), F.col("n.lbl").alias("lbl"))
+        )
+        return new_labels, changed
+
+    def converged(state) -> bool:
+        nonlocal prev_total
+        if not numeric_probe:
+            return state[1].isEmpty()
+        total = _total(state[0])
+        same, prev_total = total == prev_total, total
+        return same
+
     try:
-        for _ in range(max_iter):
-            # r14 (guide §3.1): the sender side is node-sized
-            # (delta-sized after round 0); SHUFFLE_HASH builds that
-            # small slice per partition (never a broadcast of a
-            # node-sized relation) and STREAMS the cached edges — no
-            # per-round sort of the edge list, which the default
-            # sort-merge paid every round.  r15: the edge side is an
-            # InMemoryRelation carrying HashPartitioning(u, npart), so
-            # the round's ONLY exchange is the sender side.
-            msgs = edges.join(
-                changed.hint("shuffle_hash"), edges["u"] == changed["id"]
-            ).select(F.col("v").alias("id"), F.col("lbl"))
-            jump = (
-                labels.alias("a")
-                .join(labels.alias("b"), F.col("a.lbl") == F.col("b.id"))
-                .select(
-                    F.col("a.id").alias("id"), F.col("b.lbl").alias("lbl")
-                )
-            )
-            # eager=False (r14): the convergence probe right below is
-            # the round's first action and materializes the checkpoint
-            # as a side effect — ONE Spark job per round instead of two
-            # (the eager default materialized in its own job, then the
-            # probe ran a second; at bench scale the per-job fixed cost
-            # was ~half the round wall).
-            new_labels = (
-                labels.select("id", "lbl")
-                .union(msgs)
-                .union(jump)
-                .groupBy("id")
-                .agg(F.min("lbl").alias("lbl"))
-                .localCheckpoint(eager=False, storageLevel=disk)
-            )
-            # next round's senders: nodes whose label shrank this round
-            # (node-sized join of two checkpointed label frames,
-            # evaluated lazily inside next round's single job).  r15
-            # (ADVICE r14 dedup.py:930): ONE definition — the
-            # non-numeric convergence probe now derives from it instead
-            # of building the identical old⋈new join a second time.
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
-                .where(F.col("n.lbl") != F.col("o.lbl"))
-                .select(
-                    F.col("n.id").alias("id"), F.col("n.lbl").alias("lbl")
-                )
-            )
-            if numeric_probe:
-                total = _total(new_labels)
-                converged = total == prev_total
-                prev_total = total
-            else:
-                converged = changed.isEmpty()
-            labels = new_labels
-            if converged:
-                return labels.select(
-                    F.col("id").alias(out_id), F.col("lbl").alias(out_root)
-                )
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iter} iterations — "
-            "pathological graph topology; raise max_iter"
+        labels, _ = _iterate(
+            propagate,
+            (labels, labels),
+            max_iter,
+            _EVERY_CC,
+            done=converged,
+            fail=f"dedup_clusters did not converge in {max_iter} iterations — "
+            "pathological graph topology; raise max_iter",
+            storage=disk,
         )
     finally:
         # Deregister the edge cache before returning: the returned
@@ -1044,6 +1017,7 @@ def dedup_clusters(
         # caching the bench contract forbids.
         if cached_edges is not None:
             cached_edges.unpersist()
+    return labels.select(F.col("id").alias(out_id), F.col("lbl").alias(out_root))
 
 
 def retain_per_cluster(

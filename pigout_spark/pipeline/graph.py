@@ -16,12 +16,113 @@ any practical tolerance.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: fixed-point scale: 1 rank = 10^12 units (int64-safe: total mass
 #: ≤ 10^13 units; the damping multiply peaks at 85·10^12 « 2^63)
 PAGERANK_UNIT = 10**12
+
+# Rounds between lineage cuts (lazy localCheckpoints) in each loop.  A
+# loop that runs an action every round (a convergence probe, or hits'
+# broadcast L1 total) re-executes all lineage since the last cut inside
+# that action, so it cuts every round.  A loop with no per-round action
+# compiles a short run into one Catalyst plan, where identical subtrees
+# reuse their exchanges, so it cuts every 4th round.  The cost is
+# driver-side plan depth, not data volume, so the choice holds at any
+# scale.  Interleaved A/B walls at sf0.1, cadence 1 vs 4: k_core 1.79 vs
+# 2.72 s; label_propagation 2.44 vs 2.85 s (no probe, but its plan depth
+# still wins); hits best 10.4 vs 13.3 s over 4 pairs of a 2-round run;
+# bfs 2.66 vs 2.03 s; sssp 3.76 vs 3.23 s.  PageRank with a cut every
+# round cost ~3x the wall of a 3-round run.  dedup_clusters' probe is an
+# action, so it cuts every round.
+_EVERY_PAGERANK = _EVERY_BFS = _EVERY_SSSP = 4
+_EVERY_KCORE = _EVERY_LPA = _EVERY_HITS = _EVERY_CC = 1
+
+
+def _edges(
+    edges: DataFrame,
+    s: Column,
+    d: Column,
+    weight_col: str | None = None,
+    weight_rule: str | None = None,
+    symmetric: bool = False,
+    simple: bool = False,
+) -> DataFrame:
+    """The edge relation ``(__s, __d)`` of columns ``s`` → ``d`` of
+    ``edges``; edges with a NULL endpoint are dropped.
+
+    - ``simple``: the undirected simple graph — one ``__s < __d`` row
+      per unordered pair, self-loops dropped.
+    - ``weight_rule`` (the caller's error message) adds ``__w``: the
+      ``weight_col`` as bigint, asserted into [1, 1e5] on the same scan
+      (positive, with int64 headroom), or 1 when ``weight_col`` is None.
+      A zero or negative weight would silently corrupt ranks and path
+      sums; assert_true returns NULL on success, so the filter keeps
+      every valid row and costs no extra pass.
+    - ``symmetric``: both directions of every edge, emitted in-task by
+      an explode of a 2-array.  A union of two projections would plan
+      the whole upstream twice.
+    """
+    e = edges.filter(s.isNotNull() & d.isNotNull())
+    if simple:
+        e = e.filter(s != d).select(
+            F.least(s, d).alias("__s"), F.greatest(s, d).alias("__d")
+        ).distinct()
+        s, d = F.col("__s"), F.col("__d")
+    w = []
+    if weight_rule is not None:
+        w = [F.lit(1).cast("bigint").alias("__w")]
+        if weight_col is not None:
+            wc = F.col(weight_col).cast("bigint")
+            e = e.filter(
+                F.assert_true(wc.between(1, 100_000), F.lit(weight_rule)).isNull()
+            )
+            w = [wc.alias("__w")]
+    fwd = [s.alias("__s"), d.alias("__d"), *w]
+    if not symmetric:
+        return e.select(*fwd)
+    back = F.struct(d.alias("__s"), s.alias("__d"), *w)
+    return e.select(F.explode(F.array(F.struct(*fwd), back)).alias("__e")).select(
+        "__e.*"
+    )
+
+
+def _degree(und: DataFrame) -> DataFrame:
+    """``(n, deg)`` for every node of a simple :func:`_edges` relation."""
+    return (
+        und.select(F.explode(F.array("__s", "__d")).alias("n"))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+
+
+def _iterate(step, state, rounds, every, done=None, fail="", storage=None):
+    """The round loop of every iterative operator: ``state =
+    step(state, i, cut)`` for ``i`` = 1..``rounds``.
+
+    ``cut(df)`` cuts a round-state frame's lineage on every ``every``-th
+    round and returns ``df`` unchanged otherwise.  The cut is a lazy
+    localCheckpoint at ``storage`` (the default level when None): the
+    round's next action writes it instead of an eager job of its own.  With ``done``, the loop runs to a fixpoint:
+    the probe ``done(state)`` runs after each step, the first state it
+    accepts is returned, and ``RuntimeError(fail)`` is raised when none
+    is within ``rounds`` rounds.  Without it, exactly ``rounds`` rounds
+    run.
+    """
+    for i in range(1, int(rounds) + 1):
+
+        def cut(df: DataFrame, now: bool = i % every == 0) -> DataFrame:
+            if not now:
+                return df
+            return df.localCheckpoint(eager=False, storageLevel=storage)
+
+        state = step(state, i, cut)
+        if done is not None and done(state):
+            return state
+    if done is not None:
+        raise RuntimeError(fail)
+    return state
 
 
 def pagerank(
@@ -30,7 +131,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 5,
     damping_pct: int = 85,
-    checkpoint_every: int = 4,
     weight_col: str | None = None,
     seeds: list | None = None,
 ) -> DataFrame:
@@ -58,21 +158,14 @@ def pagerank(
     plan as a literal IN — not a join side).
 
 
-    100 TB: the degree-annotated edge list is shuffled ONCE onto the
-    source key and checkpointed; the node relation once onto the node
-    key.  Every subsequent rank vector inherits HashPartitioning(node)
-    from the per-round aggregation/join, so each round plans exactly
-    ONE new exchange — the transpose (contributions regrouped by
-    destination, map-side combined), which is inherent to PageRank.
-    The edge↔rank join and the nodes↔sums join are co-partitioned
-    zero-shuffle joins (r6: the previous shape re-exchanged both join
-    inputs every round — 3 exchanges/round → 1).  Ranks are
-    localCheckpoint'ed every ``checkpoint_every`` rounds — often enough
-    to keep lineage constant-depth on long runs (the dedup_clusters
-    discipline), rare enough that short runs compile to ONE Catalyst
-    plan instead of a stage barrier per round (a per-round checkpoint
-    cost ~3× wall on a 3-iteration run).  The driver holds only N (a
-    scalar).
+    100 TB: the degree-annotated edge list is shuffled once onto the
+    source key and checkpointed.  The checkpoint does not keep that
+    hash partitioning, so every round after the first re-exchanges the
+    checkpointed edge list onto the source key for the join with the
+    rank sums, then exchanges the contributions onto their destination
+    (map-side combined) — two exchanges per round.  The
+    rank sums are node-sized and checkpointed on the cadence at the
+    top of this module.  The driver holds only N (a scalar).
     """
     # Materialize the (typically derived — a distinct, a projection of
     # a fact table) DEGREE-ANNOTATED edge relation once: a single
@@ -86,40 +179,16 @@ def pagerank(
     # with only partitionBy still sorts) — the SHJ build side is the
     # per-partition degree slice (|distinct src|/P rows — bounded at
     # any scale, NOT a broadcast of a node-sized relation), measured
-    # −15% on the e-build at sf1, bit-identical output.  The result
-    # stays HashPartitioned(__s) for every round's contribution join.
-    w = (
-        F.col(weight_col).cast("bigint")
-        if weight_col is not None
-        else F.lit(1).cast("bigint")
-    )
-    if weight_col is not None:
-        # Enforce the documented weight contract (positive integers
-        # with overflow headroom) instead of silently corrupting
-        # ranks: a zero-weight-only source used to make __deg 0 and
-        # swallow the null division; negatives flipped signs with no
-        # error (ADVICE r7).  assert_true returns NULL on success, so
-        # the filter keeps every valid row and the check rides the
-        # existing scan — distributed, no extra pass.
-        edges = edges.filter(
-            F.assert_true(
-                F.col(weight_col).cast("bigint").between(1, 100_000),
-                F.lit(
-                    f"pagerank: {weight_col} must be an integer in "
-                    "[1, 1e5] (positive, with int64 overflow headroom)"
-                ),
-            ).isNull()
-        )
+    # −15% on the e-build at sf1, bit-identical output.
     # NULL endpoints fail loudly (ADVICE r10): the degree fold is an
     # inner join on __s, so a NULL source would silently drop the edge
-    # (and its destination from the node set) — the pre-r10 window
-    # construction kept a NULL partition instead.  The check is BAKED
-    # INTO the key projection (coalesce short-circuits for valid rows,
+    # (and its destination from the node set).  The check is BAKED INTO
+    # the key expression (coalesce short-circuits for valid rows,
     # raise_error fires for NULLs) rather than a separate assert_true
     # filter: Catalyst infers isnotnull(__s) from the inner join and
     # would evaluate that inferred filter first, silently removing the
     # very rows the assert was meant to catch.
-    def _nn(col_name: str, alias: str):
+    def _nn(col_name: str) -> Column:
         return F.coalesce(
             F.col(col_name),
             F.raise_error(
@@ -128,16 +197,18 @@ def pagerank(
                     "edges would vanish in the degree join)"
                 )
             ).cast(edges.schema[col_name].dataType),
-        ).alias(alias)
+        )
 
-    ep = edges.select(_nn(src, "__s"), _nn(dst, "__d"), w.alias("__w")).repartition(
-        "__s"
-    )
+    ep = _edges(
+        edges,
+        _nn(src),
+        _nn(dst),
+        weight_col,
+        f"pagerank: {weight_col} must be an integer in [1, 1e5] "
+        "(positive, with int64 overflow headroom)",
+    ).repartition("__s")
     degs = ep.groupBy("__s").agg(F.sum("__w").alias("__deg"))
     e = ep.join(degs.hint("shuffle_hash"), "__s").localCheckpoint(eager=False)
-    # Nodes read the checkpointed edges (recomputed once more by the
-    # final join — one shuffle from the checkpoint, cheaper than a
-    # second materialization barrier; measured r7).
     # node relation: consumed by the N aggregation and the final
     # base+sums join; it recomputes from the CHECKPOINTED e both times,
     # which measures cheaper than a second materialization barrier
@@ -198,9 +269,8 @@ def pagerank(
         )
     # rank_i(u) = base(u) + (d·sums_i(u)) div 100 is folded INTO the
     # next round's contribution expression, so a round is ONE left join
-    # of the edge list with the (dst-keyed) sums relation —
-    # co-partitioned, zero new exchange — plus the transpose
-    # aggregation (the single per-round shuffle).  The full node
+    # of the edge list with the (dst-keyed) sums relation plus the
+    # transpose aggregation.  The full node
     # relation is only joined once, at the end; nodes that never
     # receive contributions sit at their base implicitly throughout.
     # Weighted: contribution = rank·w div Σw.  Overflow headroom:
@@ -212,36 +282,32 @@ def pagerank(
     rank_expr = (
         f"(__sb + ({d} * coalesce(__sum, cast(0 as bigint))) div 100)"
     )
-    sums = None
-    for it in range(1, int(iterations) + 1):
+
+    def spread(sums, i, cut):
         if sums is None:
             contrib = e.select(
                 F.col("__d").alias("node"),
                 F.expr("(__r0s * __w) div __deg").alias("__c"),
             )
         else:
-            # r15 (VERDICT r14 #5, guide §3.1): SHUFFLE_HASH on the
-            # node-sized sums side — the default sort-merge re-SORTED
-            # the degree-annotated edge list every round (the exchange
-            # below it is identical across rounds and runtime-reused,
-            # but each round's SMJ re-sorted its output; the r14 plan
-            # held one edge-list Sort per iteration).  The build side
-            # is the per-partition slice of the rank vector — bounded
-            # by nodes/partitions at any scale, never a broadcast.
-            # LeftOuter + BuildRight is the supported SHJ shape.
+            # SHUFFLE_HASH on the node-sized sums side: a sort-merge
+            # join re-sorted the degree-annotated edge list every round.
+            # The build side is the per-partition slice of the rank
+            # vector — bounded by nodes/partitions at any scale, never a
+            # broadcast.  LeftOuter + BuildRight is the supported shape.
             contrib = e.join(
                 sums.hint("shuffle_hash"), e["__s"] == sums["__n"], "left"
             ).select(
                 F.col("__d").alias("node"),
                 F.expr(f"({rank_expr} * __w) div __deg").alias("__c"),
             )
-        sums = (
+        return cut(
             contrib.groupBy("node")
             .agg(F.sum("__c").alias("__sum"))
             .select(F.col("node").alias("__n"), "__sum")
         )
-        if checkpoint_every and it % int(checkpoint_every) == 0:
-            sums = sums.localCheckpoint(eager=False)
+
+    sums = _iterate(spread, None, iterations, _EVERY_PAGERANK)
     final_rank = node_base("node", base_units_sql) + F.expr(
         f"({d} * coalesce(__sum, cast(0 as bigint))) div 100"
     )
@@ -323,33 +389,24 @@ def triangle_count(
         s.isNotNull() & d.isNotNull()
         & (s >= 0) & (s < lim) & (d >= 0) & (d < lim)
     )
-    und = (
-        edges.filter(
-            F.assert_true(
-                ok, F.lit(f"triangle_count node ids must be in [0, {lim})")
-            ).isNull()
-        )
-        .filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
+    checked = edges.filter(
+        F.assert_true(
+            ok, F.lit(f"triangle_count node ids must be in [0, {lim})")
+        ).isNull()
     )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionByName(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    und = _edges(checked, s, d, simple=True)
+    deg = _degree(und)
     # comparison key: degree-major, id-minor — a total order
     key = (F.col("deg") * F.lit(lim) + F.col("n")).alias("ok")
     ranked = deg.select("n", key)
-    withk = (
-        und.join(ranked.select(F.col("n").alias("a"), F.col("ok").alias("ka")), "a")
-        .join(ranked.select(F.col("n").alias("b"), F.col("ok").alias("kb")), "b")
-    )
+    withk = und.join(
+        ranked.select(F.col("n").alias("__s"), F.col("ok").alias("ka")), "__s"
+    ).join(ranked.select(F.col("n").alias("__d"), F.col("ok").alias("kb")), "__d")
+    lo_first = F.col("ka") < F.col("kb")
     oriented = withk.select(
-        F.when(F.col("ka") < F.col("kb"), F.col("a")).otherwise(F.col("b")).alias("s"),
-        F.when(F.col("ka") < F.col("kb"), F.col("b")).otherwise(F.col("a")).alias("d"),
-        F.when(F.col("ka") < F.col("kb"), F.col("kb")).otherwise(F.col("ka")).alias("kd"),
+        F.when(lo_first, F.col("__s")).otherwise(F.col("__d")).alias("s"),
+        F.when(lo_first, F.col("__d")).otherwise(F.col("__s")).alias("d"),
+        F.when(lo_first, F.col("kb")).otherwise(F.col("ka")).alias("kd"),
     )
     if max_wedges is not None:
         # Exact wedge-relation size from the oriented out-degrees —
@@ -438,19 +495,16 @@ def triangle_count_sampled(
         )
     p_eff = kept / buckets
     inv_p3 = 1.0 / (p_eff ** 3)
-    s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
-    und = (
-        edges.filter(s.isNotNull() & d.isNotNull() & (s != d))
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
+    und = _edges(
+        edges, F.col(src).cast("bigint"), F.col(dst).cast("bigint"), simple=True
     )
     key = F.concat_ws(
-        "|", F.col("a").cast("string"), F.col("b").cast("string")
+        "|", F.col("__s").cast("string"), F.col("__d").cast("string")
     )
     bucket = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint")
     samp = und.filter(bucket % buckets < kept)
     m = samp.agg(F.count(F.lit(1)).cast("bigint").alias("sampled_edges"))
-    tri = triangle_count(samp, "a", "b").select(
+    tri = triangle_count(samp, "__s", "__d").select(
         F.col("triangles").cast("bigint").alias("sampled_triangles")
     )
     return m.crossJoin(F.broadcast(tri)).select(
@@ -475,19 +529,8 @@ def clustering_coefficient(
     degree join; all key-equi.
 
     Output: (n, deg, triangles, coef)."""
-    lim = 1 << 31
     s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
-    und = (
-        edges.filter(s.isNotNull() & d.isNotNull()).filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionByName(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degree(_edges(edges, s, d, simple=True))
     tri = triangle_count(edges, src, dst, per_node=True)
     return deg.join(tri, "n").select(
         "n",
@@ -508,7 +551,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 40,
-    checkpoint_every: int = 1,  # measured default - rationale in docstring
 ) -> DataFrame:
     """Nodes of the k-CORE of the undirected simple graph: the maximal
     subgraph where every node keeps degree ≥ k — computed by iterative
@@ -519,55 +561,41 @@ def k_core(
     Peeling is a FIXPOINT: running more rounds than needed is a no-op,
     which is what makes the op oracle-replayable — a SQL twin can
     unroll a fixed round count ≥ the convergence point and match
-    exactly.  Exceeding ``max_rounds`` raises (the dedup_clusters
-    discipline) rather than returning a half-peeled graph.
+    exactly.  Needing more than ``max_rounds`` peel rounds raises (the
+    dedup_clusters discipline) rather than returning a half-peeled
+    graph.
 
     Output: one row (n) per surviving node.
 
     100 TB: each round is one degree groupBy + two anti-joins, all
     key-equi on node ids; the live edge list shrinks monotonically and
-    is localCheckpoint'ed every ``checkpoint_every`` rounds to keep
-    lineage constant-depth.  Convergence probe is one `limit(1)` scan
-    of the weak-node relation per round (driver sees 0/1 rows).
-
-    ``checkpoint_every`` default 1 (r14, measured): the per-round
-    convergence probe is an ACTION, and every un-checkpointed round
-    makes that action re-execute everything since the last checkpoint
-    — interleaved A/B at sf0.1: 1.79 s at cadence 1 vs 2.72 s at 4.
-    The reasoning (probe cost ∝ lineage depth) is scale-independent,
-    not a bench-box tuning; bfs/sssp, which run NO per-round action,
-    measure the other way and default to 4.
+    is checkpointed every round to keep lineage constant-depth.  The
+    convergence probe is one `limit(1)` scan of the weak-node relation
+    per round (driver sees 0/1 rows).
     """
     s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
-    live = (
-        edges.filter(s.isNotNull() & d.isNotNull())
-        .filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    for rnd in range(1, int(max_rounds) + 1):
-        deg = (
-            live.select(F.col("a").alias("n"))
-            .unionByName(live.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("deg"))
+    live = _edges(edges, s, d, simple=True).localCheckpoint(eager=False)
+
+    def weak(live: DataFrame) -> DataFrame:
+        return _degree(live).filter(F.col("deg") < int(k)).select("n")
+
+    def peel(live, i, cut):
+        w = weak(live)
+        return cut(
+            live.join(w.withColumnRenamed("n", "__s"), "__s", "left_anti")
+            .join(w.withColumnRenamed("n", "__d"), "__d", "left_anti")
+            .select("__s", "__d")
         )
-        weak = deg.filter(F.col("deg") < int(k)).select("n")
-        if not weak.limit(1).count():
-            return live.select(F.col("a").alias("n")).unionByName(
-                live.select(F.col("b").alias("n"))
-            ).distinct()
-        live = (
-            live.join(weak.withColumnRenamed("n", "a"), "a", "left_anti")
-            .join(weak.withColumnRenamed("n", "b"), "b", "left_anti")
-            .select("a", "b")
-        )
-        if checkpoint_every and rnd % int(checkpoint_every) == 0:
-            live = live.localCheckpoint(eager=False)
-    raise RuntimeError(
-        f"k_core did not converge within {max_rounds} rounds (k={k})"
+
+    live = _iterate(
+        peel,
+        live,
+        max_rounds,
+        _EVERY_KCORE,
+        done=lambda live: not weak(live).limit(1).count(),
+        fail=f"k_core did not converge within {max_rounds} rounds (k={k})",
     )
+    return live.select(F.explode(F.array("__s", "__d")).alias("n")).distinct()
 
 
 def label_propagation(
@@ -575,7 +603,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 5,
-    checkpoint_every: int = 1,  # measured default - rationale in docstring
 ) -> DataFrame:
     """SYNCHRONOUS label propagation (community detection): every node
     starts with its own id as label; each round all nodes
@@ -597,40 +624,29 @@ def label_propagation(
     rounds are one community.
 
     100 TB: per round ONE message join (labels onto the symmetrized
-    src-partitioned edge list — co-partitioned after the first
-    round), one (node, label) count aggregation (map-side combined,
-    bounded by the edge count), one per-node argmax as a row_number
-    window on the node partitioning (label-cardinality-sized input,
-    type-generic — node ids may be strings), and one carry-over left
-    join against the node relation.  Labels are localCheckpoint'ed
-    every ``checkpoint_every`` rounds — the dedup_clusters lineage
-    discipline.
-
-    ``checkpoint_every`` default 1 (r14, measured): interleaved A/B at
-    sf0.1 read 2.44 s at cadence 1 vs 2.85 s at 4 — per-round plan
-    truncation beats compiling a rounds-deep Catalyst plan (the cost is
-    driver-side plan depth, not data volume, so the choice is not a
-    bench-box tuning; override per deployment if measured otherwise).
+    edge list, which the checkpoint leaves unpartitioned, so both join
+    sides are exchanged every round), one (node, label) count
+    aggregation (map-side combined, bounded by the edge count), one
+    per-node argmax as a row_number window on the node partitioning
+    (label-cardinality-sized input, type-generic — node ids may be
+    strings), and one carry-over left join against the node relation.
+    Labels are checkpointed every round.
     """
     from pyspark.sql import Window
 
-    s, d = F.col(src), F.col(dst)
-    base = edges.filter(s.isNotNull() & d.isNotNull() & (s != d))
     e = (
-        base.select(s.alias("__u"), d.alias("__v"))
-        .unionByName(base.select(d.alias("__u"), s.alias("__v")))
-        .distinct()
-        .repartition("__u")
+        _edges(edges, F.col(src), F.col(dst), symmetric=True, simple=True)
+        .repartition("__s")
         .localCheckpoint(eager=False)
     )
-    nodes = e.select(F.col("__u").alias("node")).distinct().localCheckpoint(
+    nodes = e.select(F.col("__s").alias("node")).distinct().localCheckpoint(
         eager=False
     )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for it in range(1, int(rounds) + 1):
+
+    def adopt(labels, i, cut):
         msgs = e.join(
-            labels, e["__u"] == labels["node"]
-        ).select(F.col("__v").alias("node"), "label")
+            labels, e["__s"] == labels["node"]
+        ).select(F.col("__d").alias("node"), "label")
         counts = msgs.groupBy("node", "label").agg(
             F.count(F.lit(1)).alias("__c")
         )
@@ -648,12 +664,14 @@ def label_propagation(
         )
         # labels IS the node relation every round (static graph), so
         # the carry-over needs no extra nodes join
-        labels = labels.join(best, "node", "left").select(
-            "node", F.coalesce(F.col("__new"), F.col("label")).alias("label")
+        return cut(
+            labels.join(best, "node", "left").select(
+                "node", F.coalesce(F.col("__new"), F.col("label")).alias("label")
+            )
         )
-        if checkpoint_every and it % int(checkpoint_every) == 0:
-            labels = labels.localCheckpoint(eager=False)
-    return labels
+
+    labels = nodes.select("node", F.col("node").alias("label"))
+    return _iterate(adopt, labels, rounds, _EVERY_LPA)
 
 
 def common_neighbors(
@@ -684,29 +702,24 @@ def common_neighbors(
     aggregation, one adjacency self-join on the wedge center, one
     pair-keyed count, two degree lookups.
     """
-    s, d = F.col(src), F.col(dst)
-    base = edges.filter(s.isNotNull() & d.isNotNull() & (s != d))
-    adj = (
-        base.select(s.alias("__w"), d.alias("__x"))
-        .unionByName(base.select(d.alias("__w"), s.alias("__x")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = adj.groupBy("__x").agg(F.count(F.lit(1)).alias("__deg")).select(
-        F.col("__x").alias("node"), "__deg"
+    adj = _edges(
+        edges, F.col(src), F.col(dst), symmetric=True, simple=True
+    ).localCheckpoint(eager=False)
+    deg = adj.groupBy("__d").agg(F.count(F.lit(1)).alias("__deg")).select(
+        F.col("__d").alias("node"), "__deg"
     )
     centers = adj
     if max_wedge_degree is not None:
-        wdeg = adj.groupBy("__w").agg(F.count(F.lit(1)).alias("__wd"))
+        wdeg = adj.groupBy("__s").agg(F.count(F.lit(1)).alias("__wd"))
         centers = adj.join(
-            wdeg.filter(F.col("__wd") <= int(max_wedge_degree)).select("__w"),
-            "__w",
+            wdeg.filter(F.col("__wd") <= int(max_wedge_degree)).select("__s"),
+            "__s",
         )
     a, b = centers.alias("a"), centers.alias("b")
     pairs = a.join(
         b,
-        (F.col("a.__w") == F.col("b.__w")) & (F.col("a.__x") < F.col("b.__x")),
-    ).select(F.col("a.__x").alias("u"), F.col("b.__x").alias("v"))
+        (F.col("a.__s") == F.col("b.__s")) & (F.col("a.__d") < F.col("b.__d")),
+    ).select(F.col("a.__d").alias("u"), F.col("b.__d").alias("v"))
     counts = pairs.groupBy("u", "v").agg(
         F.count(F.lit(1)).cast("long").alias("common")
     ).filter(F.col("common") >= int(min_common))
@@ -730,20 +743,9 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg hubs & authorities) over a
     DIRECTED edge relation: per round
-
-    ``checkpoint_every`` default 1 (r15, measured): each round's L1
-    rescale computes a broadcast total over the CURRENT scores, so an
-    un-checkpointed round re-executes the whole score lineage since the
-    last checkpoint inside that broadcast — the k_core per-round-action
-    situation, not the bfs/sssp one the r14 default assumed by shape
-    analogy.  Interleaved A/B at sf0.1 (4 pairs, 2-round run): cadence
-    1 won every pair, best 10.4 s vs 13.3 s (~20%).  The reasoning is
-    scale-independent (driver-side lineage depth, not data volume);
-    override per deployment if a cluster measurement says otherwise.
 
         auth(v) = Σ_{u→v} hub(u)      then rescale toward L1 = 10^12
         hub(u)  = Σ_{u→v} auth(v)     then rescale toward L1 = 10^12
@@ -768,16 +770,15 @@ def hits(
     node of the graph is listed.
 
     100 TB: per round two key-equi join+aggregate passes over the
-    twice-shuffled-and-checkpointed edge list (one exchange each — the
-    src→dst transpose and back, inherent to HITS) and two 1-row
-    broadcast scalars; scores are node-sized relations checkpointed on
-    the usual cadence.  No windows, no collect beyond the scalar
-    frames Spark broadcasts itself.
+    checkpointed edge list (the src→dst transpose and back, inherent to
+    HITS; the checkpoint keeps no partitioning, so each join exchanges
+    the edge list) and two 1-row broadcast scalars; scores are
+    node-sized relations checkpointed every round, since each round's
+    broadcast L1 total is an action over them.  No windows, no collect
+    beyond the scalar frames Spark broadcasts itself.
     """
-    s, d = F.col(src), F.col(dst)
-    base = edges.filter(s.isNotNull() & d.isNotNull())
     e = (
-        base.select(s.alias("__s"), d.alias("__d"))
+        _edges(edges, F.col(src), F.col(dst))
         .repartition("__s")
         .localCheckpoint(eager=False)
     )
@@ -811,8 +812,8 @@ def hits(
             ).alias(col),
         )
 
-    auth = None
-    for it in range(1, int(iterations) + 1):
+    def reinforce(state, i, cut):
+        hub = state[0]
         raw_a = (
             e.join(hub, e["__s"] == hub["node"])
             .groupBy(F.col("__d").alias("node"))
@@ -837,9 +838,9 @@ def hits(
             ),
             "__h",
         )
-        if checkpoint_every and it % int(checkpoint_every) == 0:
-            hub = hub.localCheckpoint(eager=False)
-            auth = auth.localCheckpoint(eager=False)
+        return cut(hub), cut(auth)
+
+    hub, auth = _iterate(reinforce, (hub, None), iterations, _EVERY_HITS)
     unit = F.lit(float(PAGERANK_UNIT))
     return (
         nodes.join(hub, "node")
@@ -859,7 +860,6 @@ def bfs_distances(
     dst: str = "dst",
     max_hops: int = 5,
     directed: bool = True,
-    checkpoint_every: int = 4,  # measured default - rationale in docstring
 ) -> DataFrame:
     """Multi-source BFS: the minimum HOP COUNT from the nearest source
     to every node reachable within ``max_hops`` edges.  The reach/
@@ -883,39 +883,24 @@ def bfs_distances(
     Output: (node, hops) — sources at 0; unreachable-within-budget
     nodes absent.
 
-    100 TB: the edge list shuffles ONCE onto the source key
-    (checkpointed); each round is one co-partitioned frontier⋈edges
-    join + one anti-join against the settled set, both on node-key
-    partitioning.  The frontier is the working set — on real graphs it
-    peaks and shrinks, so late rounds are cheap; the settled relation
-    grows monotonically and is localCheckpoint'ed every
-    ``checkpoint_every`` rounds (constant-depth lineage, the k_core
-    discipline).  The driver holds only the seed literals.
-
-    ``checkpoint_every`` default 4 (r14, measured): no per-round
-    action runs here, and identical duplicated subtrees get
-    ReusedExchange at runtime, so per-round checkpoints are pure
-    barrier overhead — interleaved A/B at sf0.1: 2.03 s at cadence 4
-    vs 2.66 s at 1 (sssp 3.23 vs 3.76).  k_core/label_prop/hits, which
-    do run (or embed) a per-round action, measure the other way and
-    default to 1.
+    100 TB: the deduplicated edge list is shuffled once onto the source
+    key and checkpointed; the checkpoint keeps no partitioning, so each
+    round's frontier⋈edges join exchanges the edge list again, then one
+    anti-join against the settled set on the node key.  The frontier is
+    the working set — on real graphs it peaks and shrinks, so late
+    rounds are cheap; the settled relation grows monotonically and is
+    checkpointed every 4th round (no per-round action runs here).  The
+    driver holds only the seed literals.
     """
     if not sources:
         raise ValueError("bfs_distances: sources must be a non-empty list")
     s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
-    e = edges.filter(s.isNotNull() & d.isNotNull()).select(
-        s.alias("__s"), d.alias("__d")
+    e = (
+        _edges(edges, s, d, symmetric=not directed)
+        .distinct()
+        .repartition("__s")
+        .localCheckpoint(eager=False)
     )
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d"))
-        )
-    # r14 (guide §2.4): land the deduped edge list ON the source key
-    # before checkpointing — the docstring's "shuffles ONCE onto the
-    # source key" contract.  distinct() leaves (__s, __d) partitioning,
-    # which no round join can reuse; one extra exchange here saves one
-    # e-sized exchange in EVERY round.
-    e = e.distinct().repartition("__s").localCheckpoint(eager=False)
     spark = edges.sparkSession
     seeds = spark.createDataFrame(
         [(int(x),) for x in sources], "node bigint"
@@ -923,8 +908,9 @@ def bfs_distances(
     # Seeds that never appear in the edge relation still belong in the
     # output at hop 0 (they are trivially reachable from themselves).
     settled = seeds.withColumn("hops", F.lit(0).cast("bigint"))
-    frontier = settled.select("node")
-    for i in range(1, int(max_hops) + 1):
+
+    def expand(state, i, cut):
+        settled, frontier = state
         reached = (
             frontier.join(e, frontier.node == e.__s)
             .select(F.col("__d").alias("node"))
@@ -933,12 +919,10 @@ def bfs_distances(
         newly = reached.join(settled, "node", "left_anti").withColumn(
             "hops", F.lit(i).cast("bigint")
         )
-        settled = settled.unionByName(newly)
-        frontier = newly.select("node")
-        if checkpoint_every and i % int(checkpoint_every) == 0:
-            settled = settled.localCheckpoint(eager=False)
-            frontier = frontier.localCheckpoint(eager=False)
-    return settled
+        return cut(settled.unionByName(newly)), cut(newly.select("node"))
+
+    state = (settled, settled.select("node"))
+    return _iterate(expand, state, max_hops, _EVERY_BFS)[0]
 
 
 def shortest_paths(
@@ -949,7 +933,6 @@ def shortest_paths(
     weight_col: str | None = None,
     iterations: int = 5,
     directed: bool = True,
-    checkpoint_every: int = 4,  # measured default - rationale in docstring
 ) -> DataFrame:
     """Fixed-iteration Bellman-Ford: the minimum WEIGHTED distance
     from the nearest source to every node, over paths of at most
@@ -969,67 +952,42 @@ def shortest_paths(
     edge budget absent.
 
     100 TB: classic relaxation — each round joins the CURRENT distance
-    relation to the once-shuffled, once-checkpointed edge list on the
-    source key (co-partitioned), takes the map-side-combinable min per
-    destination, and merges with a node-key groupBy.  Per round: one
-    exchange (the transpose onto dst), the pagerank shape.  The
-    distance relation is node-sized, checkpointed every
-    ``checkpoint_every`` rounds.  No driver-side state beyond seeds.
-
-    ``checkpoint_every`` default 4: same measured reasoning as
-    :func:`bfs_distances` (no per-round action; A/B sssp 3.23 s at
-    cadence 4 vs 3.76 s at 1).
+    relation to the checkpointed edge list on the source key, takes the
+    map-side-combinable min per destination, and merges with a
+    node-key groupBy.  The checkpoint keeps no partitioning, so the
+    join exchanges the edge list every round, then the transpose onto
+    dst — the pagerank shape.  The distance relation is node-sized,
+    checkpointed every 4th round.  No driver-side state beyond seeds.
     """
     if not sources:
         raise ValueError("shortest_paths: sources must be a non-empty list")
     s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
-    w = (
-        F.col(weight_col).cast("bigint")
-        if weight_col is not None
-        else F.lit(1).cast("bigint")
-    )
-    e = edges.filter(s.isNotNull() & d.isNotNull()).select(
-        s.alias("__s"), d.alias("__d"), w.alias("__w")
-    )
-    if weight_col is not None:
-        # Same contract and mechanism as pagerank's weight guard: a
-        # non-positive or huge weight must fail loudly, and the check
-        # rides the existing distributed scan.
-        e = e.filter(
-            F.assert_true(
-                F.col("__w").between(1, 100_000),
-                F.lit(
-                    f"shortest_paths: {weight_col} must be an integer "
-                    "in [1, 1e5] (positive, with int64 path-sum headroom)"
-                ),
-            ).isNull()
-        )
-    if not directed:
-        e = e.unionByName(
-            e.select(
-                F.col("__d").alias("__s"),
-                F.col("__s").alias("__d"),
-                F.col("__w"),
-            )
-        )
-    e = e.localCheckpoint(eager=False)
+    e = _edges(
+        edges,
+        s,
+        d,
+        weight_col,
+        f"shortest_paths: {weight_col} must be an integer "
+        "in [1, 1e5] (positive, with int64 path-sum headroom)",
+        symmetric=not directed,
+    ).localCheckpoint(eager=False)
     spark = edges.sparkSession
     dist = (
         spark.createDataFrame([(int(x),) for x in sources], "node bigint")
         .distinct()
         .withColumn("dist", F.lit(0).cast("bigint"))
     )
-    for i in range(1, int(iterations) + 1):
+
+    def relax(dist, i, cut):
         relaxed = (
             dist.join(e, dist.node == e.__s)
             .groupBy(F.col("__d").alias("node"))
             .agg(F.min(F.col("dist") + F.col("__w")).alias("dist"))
         )
-        dist = (
+        return cut(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if checkpoint_every and i % int(checkpoint_every) == 0:
-            dist = dist.localCheckpoint(eager=False)
-    return dist
+
+    return _iterate(relax, dist, iterations, _EVERY_SSSP)

@@ -4859,7 +4859,7 @@ def x_rank_metrics(spark, sf_dir):
 
 @query(
     "x_mm_decode",
-    extra=True,  # r10 addition — takes a driver slot in _WINDOW_R10
+    extra=True,
     sql="""
     WITH g AS (
       SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import warnings
 from pathlib import Path
 
 import pytest
@@ -29,6 +30,19 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.nodeid in _SLOW_IDS:
             item.add_marker(pytest.mark.slow)
+    # A renamed test silently drops out of the slow tier, so warn about
+    # ids that match nothing in a file that was collected whole (runs
+    # narrowed to single node ids cannot tell).
+    if any("::" in a for a in config.args):
+        return
+    files = {item.nodeid.split("::")[0] for item in items}
+    collected = {item.nodeid for item in items}
+    for stale in sorted(_SLOW_IDS - collected):
+        if stale.split("::")[0] in files:
+            warnings.warn(
+                f"{_SLOW_FILE.name}: {stale} matches no collected test",
+                pytest.PytestConfigWarning,
+            )
 
 
 @pytest.fixture(scope="session")
