@@ -514,6 +514,10 @@ def _assert_qdigest_params(
             & (F.col("levels") == F.lit(int(levels))),
             F.lit(f"qdigest parameter mismatch: expected k={k}, levels={levels}"),
         ).isNull()
+        & F.assert_true(
+            F.col("nid") >= 1,
+            F.lit("malformed qdigest: node id nid must be >= 1 (the root is 1)"),
+        ).isNull()
     ).select(*(keys or []), "nid", "cnt")
 
 
@@ -571,7 +575,8 @@ def qdigest_quantiles(
     # right endpoint in value space: node at level ℓ covers
     # 2^(levels-ℓ) leaves ending at (nid+1)·2^(levels-ℓ)−1−cap, with
     # ℓ = floor(log2(nid)) = length(bin(nid))−1 — EXACT integer
-    # arithmetic (bin() is a string length, never a float log).
+    # arithmetic (bin() is a string length, never a float log).  Needs
+    # nid ≥ 1 (nid = 0 would read −1), asserted above.
     # r15 (VERDICT r14 #7, guide §4 — driver-side Python is still
     # Python): this and the folds below used to be built as a
     # (levels+1)-deep ``F.when`` chain plus one nested two-lambda

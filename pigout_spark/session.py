@@ -9,7 +9,9 @@ skew handling on, parallelism) to their Spark equivalents.
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 #: Runtime-settable confs applied to ANY session handed to us (including the
@@ -39,14 +41,45 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: Janino-compiled classes kept per JVM (Spark's default is 100).
+#: perfbench's relational list generates 156 distinct classes and its
+#: pipeline list 129, so at 100 the LRU evicted most of them before their
+#: next use: every round recompiled 92-148 (relational) and 83-122
+#: (pipeline) classes (x_apply_cdc alone: 35 per execution).  The whole
+#: registry (258 queries) generates ~3300 classes at sf0.001; one pass
+#: over it grows metaspace by ~150 MB, the worst case, which 4096 holds.
+#: A static conf: it takes effect only on the builder, before the JVM
+#: starts.
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Best-effort apply RUNTIME_CONFS to an existing session."""
+    """Apply RUNTIME_CONFS to an existing session, skipping any conf the
+    session refuses to modify.  Warns when the session (e.g. the
+    driver's) was built with a smaller codegen cache than get_spark's,
+    which no runtime conf can change."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf not settable on this build — proceed with defaults
+        except AnalysisException:
+            pass  # conf not modifiable on this session — keep its value
+    entries = int(spark.conf.get(CODEGEN_CACHE_CONF, "100"))
+    if entries < CODEGEN_CACHE_ENTRIES:
+        warnings.warn(
+            f"{CODEGEN_CACHE_CONF}={entries} (< {CODEGEN_CACHE_ENTRIES}): "
+            "generated code is evicted and recompiled on every query; it "
+            "is a static conf and must be set before the JVM starts",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return spark
+
+
+def janino_compiles(spark: SparkSession) -> int:
+    """Janino compiles so far in this JVM (a codegen-cache miss each)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def get_spark(
@@ -81,6 +114,7 @@ def get_spark(
         # Don't let tiny local files produce one giant partition each at
         # scale; 128m is the parquet-friendly default.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         b = b.config(k, v)

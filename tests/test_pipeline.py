@@ -2173,6 +2173,19 @@ def test_qdigest_is_self_describing(spark):
         qdigest_build(bad, "v", levels=12).collect()
 
 
+def test_qdigest_rejects_node_id_zero(spark):
+    """Node ids start at the root, 1: a malformed digest with a nid = 0
+    row fails loudly instead of answering est = -1."""
+    import pytest
+    from pigout_spark.pipeline.sketches import qdigest_quantiles
+
+    bad = spark.createDataFrame(
+        [(0, 5, 64, 12), (4096, 3, 64, 12)], "nid bigint, cnt bigint, k int, levels int"
+    )
+    with pytest.raises(Exception, match="node id nid must be >= 1"):
+        qdigest_quantiles(bad, [0.5], k=64, levels=12).collect()
+
+
 def test_qdigest_keyed_per_group_quantiles(spark):
     """keys= builds one digest per group (the percentile-rollup
     shape): group digests are independent — each matches the digest of

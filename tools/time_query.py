@@ -1,6 +1,7 @@
 """Time individual queries exactly the way bench.py does (noop sink,
 min-of-N on a warmed session) without the full headline sweep — the
-optimization-round iteration tool.
+optimization-round iteration tool.  Each run prints its time and its
+Janino compiles (codegen-cache misses), e.g. ``0.231/0``.
 
 Usage: python tools/time_query.py [-n N] [--sf DIR] query [query ...]
 """
@@ -15,7 +16,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from bench import _needs_rebuild, _sweep_persisted, _warmup  # noqa: E402
-from pigout_spark.session import get_spark  # noqa: E402
+from pigout_spark.session import get_spark, janino_compiles  # noqa: E402
 
 
 def main() -> None:
@@ -47,19 +48,21 @@ def main() -> None:
             # checkpoint blocks before timing — see bench._sweep_persisted
             del probe
             _sweep_persisted(spark)
-        runs = []
+        runs, compiles = [], []
         for _ in range(args.n):
             spark.sparkContext.setJobDescription(f"time: {name}")
+            c0 = janino_compiles(spark)
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
+            compiles.append(janino_compiles(spark) - c0)
             if has_ckpt:
                 del df
                 _sweep_persisted(spark)
         print(
-            f"{name:26s} best={min(runs):7.3f}  runs="
-            + " ".join(f"{r:.3f}" for r in runs),
+            f"{name:26s} best={min(runs):7.3f}  runs(s/compiles)="
+            + " ".join(f"{r:.3f}/{c}" for r, c in zip(runs, compiles)),
             flush=True,
         )
     spark.stop()
